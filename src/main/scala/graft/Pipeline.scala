@@ -35,45 +35,77 @@ object Pipeline {
     * engine-created caches, never the caller's. */
   def clearIntermediateCaches(spark: SparkSession): Unit = IntermediateCaches.clear(spark)
 
+  /** What an entry point does with the frame at a named stage boundary:
+    * pass it through, persist it, or commit it to a snapshot store.
+    * `compute` is by-name, so a boundary that resumes from a committed
+    * snapshot never builds the plan upstream of it. */
+  private trait Boundary {
+    def apply(stage: String)(compute: => DataFrame): DataFrame
+  }
+
+  /** Persist (engine-tracked) the named boundaries, pass the rest through.
+    * persistTracked is a no-op on an already-persisted plan, so a
+    * CALLER-persisted input is reused untouched (and never tracked —
+    * clearIntermediateCaches must not evict the caller's cache). */
+  private def persisting(stages: String*): Boundary = new Boundary {
+    def apply(stage: String)(compute: => DataFrame): DataFrame =
+      if (stages.contains(stage)) IntermediateCaches.persistTracked(compute) else compute
+  }
+
+  /** The stage graph, defined once for every entry point. The spine
+    * (input → survivors/holdouts → signatures → edges → assignments) is
+    * built in declaration order, so boundaries are reached (and snapshots
+    * committed) in that order. Candidates, scored pairs and substring edges
+    * are lazy: only `edges`' compute reaches them, so a run that resumes
+    * `edges` never builds them. */
+  private final class StageGraph(spark: SparkSession, docs: DataFrame, cfg: EngineConfig,
+                                 substringPass: Boolean, at: Boundary) {
+    val input: DataFrame = at("input")(docs)
+    // ONE split shared by both boundaries: building it twice would run the
+    // full-corpus exact-dedup shuffle twice — the widest stage in the
+    // pipeline, doubled. The persisted holdouts keep the second boundary on
+    // the materialized intermediate instead of a rebuilt plan. Lazy: a run
+    // that resumes both boundaries never builds it.
+    private lazy val split = ExactDedup.splitByHash(input, persistHoldouts = true)
+    val survivors: DataFrame = at("survivors")(split._1)
+    val holdouts: DataFrame = at("holdouts")(split._2)
+    // signatures feed bucket explosion AND both sides of the scoring join —
+    // 128-perm MinHash is the most expensive narrow transform in the
+    // pipeline, computed once
+    val signatures: DataFrame = at("signatures")(
+      Signatures.withSignatures(survivors, cfg).select("id", "minhash", "simhash"))
+    lazy val candidates: DataFrame = at("candidates")(Blocking.candidatePairs(signatures, cfg))
+    lazy val scored: DataFrame = at("scored") {
+      val raw = Scoring.score(candidates, signatures, cfg)
+      if (cfg.exactVerify) Scoring.exactVerify(raw, survivors, cfg) else raw
+    }
+    lazy val substring: DataFrame = Substring.edges(survivors, cfg)
+    val edges: DataFrame = at("edges") {
+      val sim = Scoring.edges(scored)
+      if (substringPass) sim.unionByName(substring.select("src", "dst")) else sim
+    }
+    // cluster survivors; holdouts re-attach via master (J4 semantics:
+    // cluster of master, falling back to own master id,
+    // person_1/link_model_per.py:950-953)
+    val assignments: DataFrame = at("assignments")(ExactDedup.reattach(
+      ConnectedComponents.assign(spark, survivors.select("id"), edges, cfg.maxCcIterations,
+        cfg.reliableCheckpoints, cfg.ccFastPathMaxEdges), holdouts))
+  }
+
   /** Run over a doc table with columns (id:long, text:string, url, warc_ts,
     * lang). Use [[fromPages]] first if starting from raw html.
     *
     * Cache contract: internal intermediates are persisted and tracked;
     * call [[clearIntermediateCaches]] once the Result frames are consumed. */
-  def run(spark: SparkSession, docs: DataFrame, cfg: EngineConfig = EngineConfig.default,
-          substringPass: Boolean = true): Result = {
+  def run(spark: SparkSession, docs: DataFrame, cfg: EngineConfig = EngineConfig.default): Result = {
     GraftFunctions.register(spark)
-    // persistTracked is a no-op on an already-persisted plan, so a
-    // CALLER-persisted input is reused untouched (and never tracked —
-    // clearIntermediateCaches must not evict the caller's cache)
-    val input = IntermediateCaches.persistTracked(docs)
-
-    val (survivors, holdouts) =
-      if (cfg.exactDedupByHash) ExactDedup.splitByHash(input, persistHoldouts = true)
-      else ExactDedup.split(input, persistRanked = true)
-    val sigs = IntermediateCaches.persistTracked(
-      Signatures.withSignatures(survivors, cfg).select("id", "minhash", "simhash"))
-
-    val candidates = IntermediateCaches.persistTracked(Blocking.candidatePairs(sigs, cfg))
-    val rawScored = Scoring.score(candidates, sigs, cfg)
-    val scored = IntermediateCaches.persistTracked(
-      if (cfg.exactVerify) Scoring.exactVerify(rawScored, survivors, cfg) else rawScored)
-    val simEdges = Scoring.edges(scored)
-    val subEdges =
-      if (substringPass) Substring.edges(survivors, cfg)
-      else spark.emptyDataFrame
-        .withColumn("src", lit(0L)).withColumn("dst", lit(0L))
-        .withColumn("shared_fps", lit(0L)).limit(0)
-    val allEdges = IntermediateCaches.persistTracked(
-      simEdges.unionByName(subEdges.select("src", "dst")))
-
-    // cluster survivors; holdouts re-attach via master (J4 semantics:
-    // cluster of master, falling back to own master id,
-    // person_1/link_model_per.py:950-953)
-    val survivorAssign = ConnectedComponents.assign(
-      spark, survivors.select("id"), allEdges, cfg.maxCcIterations,
-      cfg.reliableCheckpoints, cfg.ccFastPathMaxEdges)
-    val assignments = ExactDedup.reattach(survivorAssign, holdouts)
+    // candidates and scored persist: exactVerify's plan references the
+    // scoring subtree from the id semi-join, the exact join, and the
+    // below-threshold union — composed repeated subtrees that exchange
+    // reuse cannot be relied on to collapse; the pair-dedup shuffle would
+    // re-execute per reference at full candidate volume
+    val g = new StageGraph(spark, docs, cfg, substringPass = true,
+      persisting("input", "signatures", "candidates", "scored", "edges"))
 
     // cluster-row lineage (the reference's main human-facing table,
     // person_1/link_model_per.py:1064-1129 + :1219-1262): gammas of the
@@ -81,23 +113,23 @@ object Pipeline {
     // label. Substring edges lacking signature gammas join as
     // reason="substring" (anti-joined so a pair found by both passes keeps
     // its scored gammas).
-    val scoredDirect = scored.filter(col("level") >= 1)
+    val scoredDirect = g.scored.filter(col("level") >= 1)
       .select("id_l", "id_r", "jaccard_est", "hamming", "level", "reason")
-    val subDirect = subEdges.select(col("src").as("id_l"), col("dst").as("id_r"))
+    val subDirect = g.substring.select(col("src").as("id_l"), col("dst").as("id_r"))
       .join(scoredDirect.select("id_l", "id_r"), Seq("id_l", "id_r"), "left_anti")
       .select(col("id_l"), col("id_r"),
         lit(null).cast("double").as("jaccard_est"), lit(null).cast("int").as("hamming"),
         lit(1).as("level"), lit("substring").as("reason"))
     val lineage = Lineage.clusterRows(
-      assignments, scoredDirect.unionByName(subDirect), holdouts.select("id"))
+      g.assignments, scoredDirect.unionByName(subDirect), g.holdouts.select("id"))
 
-    val counters = pipelineCounters(input, holdouts, candidates, allEdges, assignments)
+    val counters = pipelineCounters(g.input, g.holdouts, g.candidates, g.edges, g.assignments)
     // telemetry AFTER the action (the bounded collects fire while the
     // metrics job materializes CC + PairGen): observed headroom of every
     // driver-side bound rides the same table an operator already watches
     val metrics = stageMetrics(spark, counters ++ ScaleStats.snapshot())
 
-    Result(assignments, scored.filter(col("level") >= 1), lineage, metrics)
+    Result(g.assignments, g.scored.filter(col("level") >= 1), lineage, metrics)
   }
 
   /** Pipeline without the metrics actions — returns lazy assignments only
@@ -105,12 +137,6 @@ object Pipeline {
   def runLite(spark: SparkSession, docs: DataFrame, cfg: EngineConfig = EngineConfig.default,
               substringPass: Boolean = true): DataFrame = {
     GraftFunctions.register(spark)
-    // only (id, text) are consumed downstream — dropping url/warc_ts/lang
-    // up front keeps them out of every downstream exchange and cache
-    val projected = docs.select("id", "text")
-    val (survivors0, holdouts) =
-      if (cfg.exactDedupByHash) ExactDedup.splitByHash(projected, persistHoldouts = true)
-      else ExactDedup.split(projected, persistRanked = true)
     // survivors feed several downstream jobs (signatures, exact verify,
     // substring). When the CALLER's doc table is uncached, cache the
     // compact (id, text) form once; when the caller already persisted the
@@ -120,33 +146,13 @@ object Pipeline {
     // cache of ~the same bytes bought nothing but the storage write
     // (guide §5: cache only when recompute beats the memory pressure;
     // same shape run() has always used over its persisted input).
-    val survivors =
-      if (docs.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        IntermediateCaches.persistTracked(survivors0)
-      else survivors0
-    // signatures feed bucket explosion AND both sides of the scoring join —
-    // 128-perm MinHash is the most expensive narrow transform in the
-    // pipeline, computed once, cached
-    val sigs = IntermediateCaches.persistTracked(
-      Signatures.withSignatures(survivors, cfg).select("id", "minhash", "simhash"))
-    // candidates persist (as in run()): exactVerify's plan references the
-    // scoring subtree from the id semi-join, the exact join, and the
-    // below-threshold union — composed repeated subtrees that exchange
-    // reuse cannot be relied on to collapse; the pair-dedup shuffle would
-    // re-execute per reference at full candidate volume
-    val candidates = IntermediateCaches.persistTracked(Blocking.candidatePairs(sigs, cfg))
-    val rawScored = Scoring.score(candidates, sigs, cfg)
-    val scored = if (cfg.exactVerify) Scoring.exactVerify(rawScored, survivors, cfg)
-      else rawScored
-    val simEdges = Scoring.edges(scored)
-    val allEdges =
-      if (substringPass)
-        simEdges.unionByName(Substring.edges(survivors, cfg).select("src", "dst"))
-      else simEdges
-    val survivorAssign = ConnectedComponents.assign(
-      spark, survivors.select("id"), allEdges, cfg.maxCcIterations,
-      cfg.reliableCheckpoints, cfg.ccFastPathMaxEdges)
-    ExactDedup.reattach(survivorAssign, holdouts)
+    val persistSurvivors =
+      if (docs.storageLevel == org.apache.spark.storage.StorageLevel.NONE) Seq("survivors")
+      else Nil
+    // only (id, text) are consumed downstream — dropping url/warc_ts/lang
+    // up front keeps them out of every downstream exchange and cache
+    new StageGraph(spark, docs.select("id", "text"), cfg, substringPass,
+      persisting(persistSurvivors ++ Seq("signatures", "candidates"): _*)).assignments
   }
 
   /** Resumable pipeline: every stage boundary is an Iceberg-style snapshot
@@ -160,46 +166,23 @@ object Pipeline {
                    cfg: EngineConfig = EngineConfig.default): DataFrame = {
     GraftFunctions.register(spark)
     val store = new graft.io.SnapshotStore(storeRoot)
-    val fp = Integer.toHexString(configJson(cfg).hashCode)
-
-    def withLineage(name: String)(compute: => DataFrame): DataFrame = {
-      val committed = store.stage(spark, name, fp)(compute)
-      if (store.currentId(s"lineage_$name").isEmpty) {
-        store.commit(s"lineage_$name",
-          committed.groupBy(spark_partition_id().as("partition_id"))
-            .count().withColumn("stage", lit(name)), fp)
-      }
-      committed
-    }
-
-    // ONE split shared by both commits: building it twice would run the
-    // full-corpus exact-dedup shuffle twice on a fresh run — the widest
-    // stage in the pipeline, doubled. The persist flag keeps the second
-    // commit on the materialized intermediate instead of a rebuilt plan.
-    // lazy: a fully-resumed run (both snapshots present) never builds it.
-    lazy val split =
-      if (cfg.exactDedupByHash)
-        ExactDedup.splitByHash(docs, "id", "text", persistHoldouts = true)
-      else ExactDedup.split(docs, "id", "text", persistRanked = true)
-    val survivors = withLineage("survivors") { split._1 }
-    val holdouts = withLineage("holdouts") { split._2 }
-    val sigs = withLineage("signatures") {
-      Signatures.withSignatures(survivors, cfg).select("id", "minhash", "simhash")
-    }
-    val edges = withLineage("edges") {
-      // persisted for the same multi-reference reason as run()/runLite
-      val cand = IntermediateCaches.persistTracked(Blocking.candidatePairs(sigs, cfg))
-      val rawScored = Scoring.score(cand, sigs, cfg)
-      val sc = if (cfg.exactVerify) Scoring.exactVerify(rawScored, survivors, cfg)
-        else rawScored
-      Scoring.edges(sc)
-        .unionByName(Substring.edges(survivors, cfg).select("src", "dst"))
-    }
-    withLineage("assignments") {
-      val sa = ConnectedComponents.assign(spark, survivors.select("id"), edges,
-        cfg.maxCcIterations, cfg.reliableCheckpoints, cfg.ccFastPathMaxEdges)
-      ExactDedup.reattach(sa, holdouts)
-    }
+    val fp = configFingerprint(cfg)
+    val commits = Set("survivors", "holdouts", "signatures", "edges", "assignments")
+    new StageGraph(spark, docs, cfg, substringPass = true, new Boundary {
+      def apply(stage: String)(compute: => DataFrame): DataFrame =
+        if (commits.contains(stage)) {
+          val committed = store.stage(spark, stage, fp)(compute)
+          if (store.currentId(s"lineage_$stage").isEmpty) {
+            store.commit(s"lineage_$stage",
+              committed.groupBy(spark_partition_id().as("partition_id"))
+                .count().withColumn("stage", lit(stage)), fp)
+          }
+          committed
+        }
+        // persisted for the same multi-reference reason as in run()
+        else if (stage == "candidates") IntermediateCaches.persistTracked(compute)
+        else compute
+    }).assignments
   }
 
   /** Ingest raw pages: extract text (pinned extractor) + assign stable ids.
@@ -289,10 +272,16 @@ object Pipeline {
       s""""substringMinFps":${cfg.substringMinFps},"substringMinRatio":${cfg.substringMinRatio},""" +
       s""""substringDfCap":${cfg.substringDfCap},"allPairsCap":${cfg.allPairsCap},""" +
       s""""extractor":"${TextExtract.version}","kernels":"${graft.expr.Hashing.kernelVersion}"}"""
-      // ccFastPathMaxEdges / reliableCheckpoints / maxCcIterations /
-      // exactDedupByHash are deliberately EXCLUDED: they change the
-      // execution plan, never the output (spec-pinned), so flipping them
-      // must still reuse snapshots. The hashing-kernel version IS included
-      // (like the extractor version): kernel output changes must invalidate
-      // old signature snapshots, not silently mix with them.
+      // ccFastPathMaxEdges / reliableCheckpoints / maxCcIterations are
+      // deliberately EXCLUDED: they change the execution plan, never the
+      // output (spec-pinned), so flipping them must still reuse snapshots.
+      // The hashing-kernel version IS included (like the extractor
+      // version): kernel output changes must invalidate old signature
+      // snapshots, not silently mix with them.
+
+  /** Snapshot key of a config: SHA-256 of [[configJson]], as hex. A 32-bit
+    * string hash would let two configs collide and resume stale snapshots. */
+  def configFingerprint(cfg: EngineConfig): String =
+    java.util.HexFormat.of().formatHex(java.security.MessageDigest.getInstance("SHA-256")
+      .digest(configJson(cfg).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
 }

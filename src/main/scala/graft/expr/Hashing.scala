@@ -471,11 +471,28 @@ object Hashing {
       }
   }
   private object WinnowScratch {
-    /** Max grams retained per thread (64 Ki grams ≈ 1.8 MB of buffers). */
+    /** Max grams retained per thread. At 64 Ki grams the gram, deque and
+      * output buffers take 1.25 MB and the probe table (up to 128 Ki
+      * slots of stamp + value) 1.5 MB: about 2.8 MB. */
     val RetainMax: Int = 1 << 16
     val tl: ThreadLocal[WinnowScratch] = new ThreadLocal[WinnowScratch] {
       override def initialValue(): WinnowScratch = new WinnowScratch
     }
+  }
+
+  /** Largest probe table [[winnow]] builds: the biggest power-of-two JVM
+    * array length. */
+  private[expr] val WinnowMaxCapacity: Int = 1 << 30
+
+  /** Probe-table capacity for `n` grams: the next power of two ≥ 2n (≤ 50%
+    * load), at least 16. Computed in Long, so it cannot wrap; a document of
+    * more than WinnowMaxCapacity / 2 grams is rejected. */
+  private[expr] def winnowCapacity(n: Int): Int = {
+    var cap = 16L
+    while (cap < 2L * n) cap <<= 1
+    require(cap <= WinnowMaxCapacity,
+      s"winnow input of $n grams exceeds the limit of ${WinnowMaxCapacity / 2} grams per document")
+    cap.toInt
   }
 
   /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03):
@@ -485,14 +502,12 @@ object Hashing {
   def winnow(text: String, k: Int, w: Int): Array[Long] = {
     if (text == null || text.length < k) return Array.empty
     val n = text.length - k + 1
-    // probe-table capacity: next pow2 ≥ 2n (≤ 50% load). The set's OUTPUT
-    // (first-occurrence order, membership) is capacity-independent, so
-    // reusing a LARGER table from scratch is bit-identical.
-    var cap = 16
-    while (cap < n * 2) cap <<= 1
+    // The set's OUTPUT (first-occurrence order, membership) is
+    // capacity-independent, so reusing a LARGER table from scratch is
+    // bit-identical.
     val s = WinnowScratch.tl.get()
-    s.ensure(n, cap)
-    cap = s.vals.length // reuse the (possibly larger) retained table
+    s.ensure(n, winnowCapacity(n))
+    val cap = s.vals.length // reuse the (possibly larger) retained table
     val gram = s.gram
     // Rabin–Karp rolling polynomial hash, mod 2^64: O(text) total instead
     // of O(text·k) — the gram hashing was the single hottest loop in the

@@ -111,12 +111,7 @@ final case class EngineConfig(
     // df-weighted exact similarity (≙ reference term_frequency_adjustments,
     // person_1/link_model_per.py:614-651): weight each shingle by
     // log(nDocs/df) so boilerplate overlap scores below content overlap
-    tfWeighting: Boolean = false,
-    // exact-dup pre-pass plan: true = 128-bit content-hash groupBy
-    // (24 B/row shuffle — the scale path; ExactDedup.splitByHash), false =
-    // full-text window (shuffles the whole corpus text; kept as the
-    // hash-free reference plan). Identical output either way (spec-pinned).
-    exactDedupByHash: Boolean = true) {
+    tfWeighting: Boolean = false) {
   require(bands * rowsPerBand == numPerms, "bands*rowsPerBand must equal numPerms")
   require(minhashKernel == "oph" || minhashKernel == "perm",
     s"unknown minhashKernel '$minhashKernel' (expected 'oph' or 'perm')")

@@ -14,47 +14,25 @@ import org.apache.spark.sql.functions._
   * to their master's cluster afterwards (`:933-1021`).
   *
   * Web analog: identical `text` → one survivor per text; holdouts keep the
-  * survivor's id as `master_id`. Partition key is `(xxhash64(text), text)` —
-  * hash first so the shuffle key is cheap and uniformly distributed, full
-  * text second so equality is exact (no reliance on hash collision-freedom
-  * at 10^12 docs).
+  * survivor's id as `master_id`. Texts are matched by a 128-bit content
+  * hash ([[ExactDedup.splitByHash]]).
   */
 object ExactDedup {
 
-  /** @param persistRanked cache the ranked frame (MEMORY_AND_DISK):
-    *        survivors feed several downstream JOBS (signatures job, exact
-    *        verify, substring, the final assignment action) and holdouts a
-    *        later one — without the cache each job re-runs the full-text
-    *        window shuffle. Serial re-work like this is exactly what caps
-    *        N→4N scaling efficiency. The cache lives until the session
-    *        drops it (callers returning lazy frames cannot unpersist).
-    * @return (survivors, holdouts) — survivors keep all input columns;
-    *         holdouts are (id, master_id). */
-  def split(docs: DataFrame, idCol: String = "id", textCol: String = "text",
-            persistRanked: Boolean = false): (DataFrame, DataFrame) = {
-    val w = Window.partitionBy(xxhash64(col(textCol)), col(textCol))
-    val ranked0 = docs
-      .withColumn("__rn", row_number().over(w.orderBy(col(idCol))))
-      .withColumn("__master", min(col(idCol)).over(w))
-    val ranked = if (persistRanked)
-      IntermediateCaches.persistTracked(ranked0)
-    else ranked0
-    val survivors = ranked.filter(col("__rn") === 1).drop("__rn", "__master")
-    val holdouts = ranked.filter(col("__rn") > 1)
-      .select(col(idCol), col("__master").as("master_id"))
-    (survivors, holdouts)
-  }
-
-  /** Scale-path variant of [[split]]: the window form above shuffles the
-    * ENTIRE corpus text (the widest possible shuffle — at 100 TB that is
-    * 100 TB through one exchange). This form shuffles 24 bytes/row instead:
-    * group on a 128-bit content hash (two independently-seeded xxhash64 —
-    * pair-collision probability ~2^-128, the content-addressing standard;
-    * "exact" dup detection at 10^12 docs is hash-exact by construction,
-    * like every CAS system), then subtract the holdout ids from the corpus
-    * with an anti-join that AQE turns into a broadcast when the holdout set
-    * is small (typical) and a hash join when it is not (10^12-dup corner).
-    * Same contract as [[split]]: survivor = min id per identical text.
+  /** Split a doc table into survivors (min id per identical text; all
+    * input columns) and holdouts (id, master_id).
+    *
+    * Scale plan: a full-text window would shuffle the ENTIRE corpus text
+    * (the widest possible shuffle — at 100 TB that is 100 TB through one
+    * exchange). This form shuffles 24 bytes/row instead: group on a 128-bit
+    * content hash (two independently-seeded xxhash64 — pair-collision
+    * probability ~2^-128, the content-addressing standard; "exact" dup
+    * detection at 10^12 docs is hash-exact by construction, like every CAS
+    * system), then subtract the holdout ids from the corpus with an
+    * anti-join that AQE turns into a broadcast when the holdout set is small
+    * (typical) and a hash join when it is not (10^12-dup corner).
+    * StagesSpec pins its output to the window plan's (a test-only
+    * reference).
     *
     * The holdout (id, master) pairs ride the narrow hash table, so the only
     * full-width data movement left is the survivors' own anti-join — text
@@ -169,6 +147,10 @@ object Signatures {
 object PairGen {
   val AllPairsCap = 64
 
+  /** Hot-key sets beyond this row count don't broadcast — fall back to the
+    * window-per-key plan (sorts everything, but never OOMs the driver). */
+  val BroadcastKeyLimit = 2000000L
+
   /** @param buckets columns: key:long, id:long, sort:long
     * @param dropHotAbove if set, buckets larger than this are excluded
     *        entirely (document-frequency pruning — used by the substring
@@ -177,23 +159,20 @@ object PairGen {
     * @return pairs (id_l, id_r, key) with id_l < id_r, deduplicated.
     *
     * Plan shape (scale-reasoned): the vast majority of bucket keys are
-    * unique or tiny, so the main path is ONE hash-aggregate shuffle
-    * (groupBy key + collect_list, lists bounded by allPairsCap) — no
-    * global sort. Hot keys are rare by construction (each holds > cap
-    * members), so their key set is collected-small and broadcast; only hot
-    * rows pay the per-key sort for O(n) chain pairing. At 10^12 docs the
+    * unique or tiny, so the main path is ONE raw-row shuffle — hash
+    * repartition by key, sort within partitions, and a streamed pass
+    * ([[streamedTagged]]) that emits every small bucket's pairs plus one
+    * exact-count marker per big bucket, buffering at most cap+1 ids per
+    * bucket. Hot keys are rare by construction (each holds > cap members),
+    * so their key set is collected-small and broadcast; only hot rows pay
+    * the range-partitioned sort for O(n) chain pairing. At 10^12 docs the
     * hot-key set is the boilerplate band/fingerprint population — bounded
-    * by rows/cap; if it ever exceeded broadcast size the fallback is the
-    * window form (kept in git history). */
-  /** Hot-key sets beyond this row count don't broadcast — fall back to the
-    * window-per-key plan (sorts everything, but never OOMs the driver). */
-  val BroadcastKeyLimit = 2000000L
-
+    * by rows/cap; if it ever exceeded [[BroadcastKeyLimit]] the plan falls
+    * back to [[pairsWindowed]]. */
   def pairs(buckets0: DataFrame, allPairsCap: Int = AllPairsCap,
             dropHotAbove: Option[Int] = None): DataFrame = {
     val spark = buckets0.sparkSession
     import spark.implicits._
-    GraftFunctions.register(spark) // collect_capped (idempotent)
     // Any key NOT taking the all-pairs path: cnt > allPairsCap (chain or
     // dropped) OR cnt > dropHotAbove (dropped). Using the MIN of the two
     // caps keeps this plan's key partition identical to pairsWindowed's
@@ -214,18 +193,11 @@ object PairGen {
     // Output is identical (StagesSpec pins main-vs-windowed parity for
     // dropHotAbove < allPairsCap).
     if (dropHotAbove.exists(_ <= allPairsCap)) {
-      // STREAMED small-pairs plan (not groupBy + collect_capped): hash
-      // repartition by key, sort within partitions, one pass emitting all
-      // i<j pairs per contiguous group of 2..bigThreshold members (groups
-      // above the threshold are df-cap-dropped). Equivalent output to the
-      // aggregate formulation — collect_capped sorts each bucket's ids and
-      // explodes i<j pairs; here the partition sort delivers the same
-      // ascending order — but the exchange carries RAW 16-byte rows and
-      // one reduce-side sort replaces ObjectHashAggregate's per-key array
-      // buffers serialized through both shuffle sides (its sort-based
-      // fallback re-sorts anyway at these key cardinalities: ~1 distinct
-      // key per 2 rows). Bounded memory: at most bigThreshold+1 buffered
-      // ids per group.
+      // STREAMED small-pairs plan: hash repartition by key, sort within
+      // partitions, one pass emitting all i<j pairs per contiguous group
+      // of 2..bigThreshold members (groups above the threshold are
+      // df-cap-dropped). The exchange carries RAW 16-byte rows; bounded
+      // memory: at most bigThreshold+1 buffered ids per group.
       return streamedTagged(buckets0, bigThreshold, emitMarkers = false)
         .select(col("a").as("id_l"), col("b").as("id_r"), col("key"))
         .filter(col("id_l") =!= col("id_r"))
@@ -233,13 +205,12 @@ object PairGen {
     // ONE raw-row shuffle over the bucket table (the widest intermediate in
     // the pipeline), then a streamed per-partition pass ([[streamedTagged]])
     // emitting every small bucket's i<j pairs PLUS one exact-count marker
-    // per big bucket. This replaced the groupBy + collect_capped plan:
-    // ObjectHashAggregate's sort-based fallback serialized a per-key array
-    // buffer through both shuffle sides at ~1 distinct key per 2 rows
-    // (partial aggregation pure overhead) — measured 2.4× slower than the
-    // streamed form at 80M bucket rows (OPTIMIZATION_r06.md change 9/10).
-    // Memory stays bounded: at most bigThreshold+1 buffered longs per
-    // group, exactly collect_capped's bound. The exact counts on markers
+    // per big bucket. This replaced a groupBy + capped-collect aggregate,
+    // whose sort-based fallback serialized a per-key array buffer through
+    // both shuffle sides — measured 2.4× slower than the streamed form at
+    // 80M bucket rows (OPTIMIZATION_r06.md change 9/10). Memory stays
+    // bounded: at most bigThreshold+1 buffered longs per group. The exact
+    // counts on markers
     // also make the chain band (allPairsCap, dropHotAbove] decidable with
     // NO separate semi-joined count job. Cached: materialized once by the
     // big-key collect below; the small-pairs branch then reads blocks
@@ -289,14 +260,13 @@ object PairGen {
     *
     *  - kind 0 rows — all i<j pairs (a = id_l, b = id_r) of every
     *    contiguous group with 2..cap members (ids ascending from the
-    *    partition sort, matching the sorted order the collect_capped
-    *    aggregate it replaced produced), and
+    *    partition sort), and
     *  - kind 1 rows (when `emitMarkers`) — one marker per group whose size
     *    exceeds `cap`, carrying the group's EXACT member count in `a`.
     *
     * Bounded memory: at most cap+1 ids buffered per group (members beyond
-    * that are counted, not stored) — the same bound the capped aggregation
-    * buffer had, with no per-key array serialization through the shuffle. */
+    * that are counted, not stored), with no per-key array serialization
+    * through the shuffle. */
   private def streamedTagged(buckets0: DataFrame, cap: Int,
                              emitMarkers: Boolean): DataFrame = {
     val spark = buckets0.sparkSession

@@ -7,15 +7,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Optimization-round instrument (guide §1.4/§1.5) — NOT the driver bench.
-  * `graft.Bench` is frozen for measurement; this separate main isolates the
-  * corpus pipeline per stage with the noop sink so each stage's wall is the
-  * computation, not the sink, and labels every job for the UI/event log.
+  * `graft.Bench` is frozen for measurement; this separate main times the
+  * corpus pipeline and labels every job for the UI/event log. Per-stage
+  * walls of the pipeline come from `python3 perfbench/run.py --workload <w>
+  * --seed <n> --seconds <s> --trace 1`.
   *
   * Modes:
-  *   runMain graft.tools.BenchExtra e2e    [docs] [reps]  — cold end-to-end
+  *   runMain graft.tools.BenchExtra e2e       [docs] [reps] — cold end-to-end
   *     runLite reps (Bench's corpus discipline: clear caches per rep, min).
-  *   runMain graft.tools.BenchExtra stages [docs] [reps]  — per-stage walls:
-  *     each stage forced with a noop write, caches cleared between reps.
+  *   runMain graft.tools.BenchExtra substring [docs] [reps] — walls inside
+  *     the substring stage (winnow cache, fingerprint PairGen, full stage),
+  *     each forced with the noop sink so the wall is the computation.
   *
   * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_LOCAL_DIR (as Bench).
   */
@@ -70,77 +72,6 @@ object BenchExtra {
         }
         println(f"""{"mode":"e2e","docs":$docs,"min_sec":${walls.min}%.1f,"docs_per_sec":${docs / walls.min}%.1f,"reps":${walls.reverse.map(w => f"$w%.1f").mkString("[", ",", "]")}}""")
 
-      case "stages" =>
-        // mirrors runLite's stage graph; each stage forced with a noop so
-        // the wall is attributable. Stage list and caches are the same
-        // shapes runLite builds (persistTracked on survivors/sigs/cands).
-        var acc = Map.empty[String, List[Double]]
-        def record(name: String, w: Double): Unit = {
-          acc = acc.updated(name, w :: acc.getOrElse(name, Nil))
-          println(f"[benchextra] $name: $w%.1f s")
-        }
-        for (r <- 1 to reps) {
-          println(s"[benchextra] --- stages rep $r ---")
-          val projected = corpus.select("id", "text")
-          sc.setJobDescription(s"benchextra r$r: exact_dedup")
-          val (split, wSplit) = timed {
-            val s = ExactDedup.splitByHash(projected, persistHoldouts = true)
-            val surv = IntermediateCaches.persistTracked(s._1)
-            noop(surv)
-            (surv, s._2)
-          }
-          record("exact_dedup", wSplit)
-          val (survivors, holdouts) = split
-
-          sc.setJobDescription(s"benchextra r$r: signatures")
-          val (sigs, wSig) = timed {
-            val sg = IntermediateCaches.persistTracked(
-              Signatures.withSignatures(survivors, cfg).select("id", "minhash", "simhash"))
-            noop(sg)
-            sg
-          }
-          record("signatures", wSig)
-
-          sc.setJobDescription(s"benchextra r$r: lsh_pairgen")
-          val (candidates, wCand) = timed {
-            val c = IntermediateCaches.persistTracked(Blocking.candidatePairs(sigs, cfg))
-            noop(c)
-            c
-          }
-          record("lsh_pairgen", wCand)
-
-          sc.setJobDescription(s"benchextra r$r: score_verify")
-          val (scored, wScore) = timed {
-            val raw = Scoring.score(candidates, sigs, cfg)
-            val scd = if (cfg.exactVerify) Scoring.exactVerify(raw, survivors, cfg) else raw
-            noop(scd.filter(col("level") >= 1).select("id_l", "id_r"))
-            scd
-          }
-          record("score_verify", wScore)
-
-          sc.setJobDescription(s"benchextra r$r: substring")
-          val (subEdges, wSub) = timed {
-            val se = Substring.edges(survivors, cfg).select("src", "dst")
-            noop(se)
-            se
-          }
-          record("substring", wSub)
-
-          sc.setJobDescription(s"benchextra r$r: cc_reattach")
-          val (_, wCc) = timed {
-            val allEdges = Scoring.edges(scored).unionByName(subEdges)
-            val sa = ConnectedComponents.assign(spark, survivors.select("id"), allEdges,
-              cfg.maxCcIterations, cfg.reliableCheckpoints, cfg.ccFastPathMaxEdges)
-            ExactDedup.reattach(sa, holdouts).count()
-          }
-          record("cc_reattach", wCc)
-          if (r < reps) clearAll()
-        }
-        val json = acc.toSeq.sortBy(_._1).map { case (k, ws) =>
-          f""""$k":${ws.min}%.1f"""
-        }.mkString("{", ",", "}")
-        println(s"""{"mode":"stages","docs":$docs,"min_stage_secs":$json}""")
-
       case "substring" =>
         // attribution inside the substring stage: winnow-cache build vs the
         // fingerprint PairGen shuffle vs the shared-count + ratio joins
@@ -169,7 +100,7 @@ object BenchExtra {
         }
 
       case other =>
-        System.err.println(s"unknown mode '$other' (e2e|stages|substring)")
+        System.err.println(s"unknown mode '$other' (e2e|substring)")
     }
     spark.stop()
   }

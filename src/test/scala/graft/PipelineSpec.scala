@@ -93,6 +93,19 @@ class PipelineSpec extends SparkSpec {
     assert(result.assignments.select("id").distinct().count() == N)
   }
 
+  test("run, runLite and a fresh runResumable assign identical clusters") {
+    // the three entry points share one stage graph and differ only in what
+    // they persist or commit at its boundaries — never in the output
+    val docs = corpus.select("id", "url", "warc_ts", "text", "lang")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "cluster_id").as[(Long, Long)].collect().toSet
+    val viaRun = pairs(result.assignments)
+    assert(viaRun.size == N)
+    assert(pairs(Pipeline.runLite(spark, docs, cfg)) == viaRun)
+    val store = java.nio.file.Files.createTempDirectory("graft-parity").toString
+    assert(pairs(Pipeline.runResumable(spark, docs, store, cfg)) == viaRun)
+  }
+
   test("metrics: five counters computed in ONE action, values = per-frame truth") {
     val input = spark.range(0, 100).toDF("id").persist()
     val holdouts = spark.range(0, 7).toDF("id").persist()

@@ -137,6 +137,20 @@ class HashingSpec extends AnyFunSuite {
     assert(Hashing.winnow(full, 25, 32).sameElements(Hashing.winnow(full, 25, 32)))
   }
 
+  test("winnow capacity: next pow2 >= 2n; past 2^29 grams a clear error, not a wrapped table") {
+    assert(Hashing.winnowCapacity(1) == 16)
+    assert(Hashing.winnowCapacity(8) == 16)
+    assert(Hashing.winnowCapacity(9) == 32)
+    assert(Hashing.winnowCapacity(1000) == 2048)
+    // the largest accepted input fills the largest power-of-two array
+    assert(Hashing.winnowCapacity(1 << 29) == Hashing.WinnowMaxCapacity)
+    // 2n overflowed Int from here on and left a 16-slot (or endless) loop
+    for (n <- Seq((1 << 29) + 1, 1 << 30, Int.MaxValue)) {
+      val e = intercept[IllegalArgumentException](Hashing.winnowCapacity(n))
+      assert(e.getMessage.contains(s"limit of ${1 << 29} grams"), e.getMessage)
+    }
+  }
+
   test("winnow: thread-local scratch reuse is bit-identical to a fresh reference") {
     // Reference: the pre-scratch formulation — same rolling hash, fresh
     // boxed LinkedHashSet dedup per call (shared with the interleaved A/B

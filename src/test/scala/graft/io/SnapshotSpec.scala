@@ -190,7 +190,7 @@ class SnapshotSpec extends SparkSpec {
     for (st <- Seq("survivors", "signatures", "edges", "assignments"))
       assert(store.currentId(s"lineage_$st").isDefined, s"missing lineage for $st")
     val lin = store.latest(spark, "lineage_assignments",
-      Integer.toHexString(Pipeline.configJson(graft.model.EngineConfig.default).hashCode))
+      Pipeline.configFingerprint(graft.model.EngineConfig.default))
     assert(lin.get.agg(org.apache.spark.sql.functions.sum("count"))
       .head().getLong(0) == 200L)
   }

@@ -2,19 +2,36 @@ package graft.stages
 
 import graft.SparkSpec
 import graft.model.EngineConfig
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class StagesSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Parity reference for [[ExactDedup.splitByHash]]: the full-text window
+    * plan it replaced. Survivors keep rn=1 per identical text (ordered by
+    * id) with all input columns; holdouts are (id, master_id = min id). */
+  private def windowSplit(docs: DataFrame): (DataFrame, DataFrame) = {
+    val w = Window.partitionBy(xxhash64(col("text")), col("text"))
+    val ranked = docs
+      .withColumn("__rn", row_number().over(w.orderBy(col("id"))))
+      .withColumn("__master", min(col("id")).over(w))
+    val survivors = ranked.filter(col("__rn") === 1).drop("__rn", "__master")
+    val holdouts = ranked.filter(col("__rn") > 1)
+      .select(col("id"), col("__master").as("master_id"))
+    (survivors, holdouts)
+  }
+
   test("ExactDedup: survivors keep rn=1, holdouts carry master = min id") {
     val docs = Seq(
       (1L, "same text"), (2L, "same text"), (3L, "same text"),
       (4L, "other"), (5L, "third")).toDF("id", "text")
-    val (surv, hold) = ExactDedup.split(docs)
-    assert(surv.select("id").as[Long].collect().sorted.sameElements(Array(1L, 4L, 5L)))
-    val h = hold.as[(Long, Long)].collect().sortBy(_._1)
-    assert(h.sameElements(Array((2L, 1L), (3L, 1L))))
+    for ((surv, hold) <- Seq(windowSplit(docs), ExactDedup.splitByHash(docs))) {
+      assert(surv.select("id").as[Long].collect().sorted.sameElements(Array(1L, 4L, 5L)))
+      val h = hold.as[(Long, Long)].collect().sortBy(_._1)
+      assert(h.sameElements(Array((2L, 1L), (3L, 1L))))
+    }
   }
 
   test("ExactDedup.reattach: holdouts inherit the master's cluster; orphans root at master") {
@@ -37,7 +54,7 @@ class StagesSpec extends SparkSpec {
       Seq((1001L, "unique a"), (1002L, "unique b"),
         (1003L, null.asInstanceOf[String]), (1004L, null.asInstanceOf[String]),
         (1005L, ""), (1006L, ""))).toDF("id", "text")
-    val (sw, hw) = ExactDedup.split(docs)
+    val (sw, hw) = windowSplit(docs)
     val (sh, hh) = ExactDedup.splitByHash(docs)
     assert(sh.select("id").as[Long].collect().sorted
       .sameElements(sw.select("id").as[Long].collect().sorted))
@@ -70,41 +87,6 @@ class StagesSpec extends SparkSpec {
     val ex = intercept[Throwable](
       spark.sql("SELECT minhash_sig('abc def ghi', 3, 16, 42, 'ohp')").collect())
     assert(chain(ex).contains("unknown minhash kernel"), chain(ex))
-  }
-
-  test("collect_capped: complete+sorted under cap, exactly cap when truncated") {
-    graft.expr.GraftFunctions.register(spark)
-    val rows = ((1L to 100L).map(i => (1L, i)) ++ Seq((2L, 7L), (2L, 3L), (2L, 5L)))
-      .toDF("key", "id").repartition(8)
-    val got = rows.groupBy("key")
-      .agg(graft.expr.GraftFunctions.collectCapped(col("id"), 11).as("ids"))
-      .as[(Long, Seq[Long])].collect().toMap
-    assert(got(2L) == Seq(3L, 5L, 7L)) // complete and sorted
-    assert(got(1L).length == 11)        // truncated at cap = big-key flag
-    assert(got(1L).toSet.subsetOf((1L to 100L).toSet))
-  }
-
-  test("collect_capped: identical results on the sort-based fallback path") {
-    // ObjectHashAggregate falls back to sort-based merging beyond
-    // spark.sql.objectHashAggregate.sortBased.fallbackThreshold in-memory
-    // keys — the plan every big corpus runs. Force it at threshold=2 and
-    // pin equality with the hash path (exercises serialize/deserialize).
-    graft.expr.GraftFunctions.register(spark)
-    val rows = (1L to 2000L).map(i => (i % 97, i)).toDF("key", "id").repartition(8)
-    def agg() = rows.groupBy("key")
-      .agg(graft.expr.GraftFunctions.collectCapped(col("id"), 64).as("ids"))
-      .as[(Long, Seq[Long])].collect().toMap
-    val hashPath = agg()
-    val prev = spark.conf.getOption("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
-    spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2")
-    try {
-      val sortPath = agg()
-      assert(sortPath == hashPath)
-      assert(sortPath(0L).length == 20 && sortPath(0L) == sortPath(0L).sorted)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", v)
-      case None => spark.conf.unset("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
-    }
   }
 
   test("PairGen: chain band when dropHotAbove > allPairsCap (exact counts via sliver job)") {
