@@ -12,6 +12,7 @@ import java.nio.file.{Files, Paths}
   * DataFrame may run the engine's eager plan-construction actions (PairGen
   * big-key collect, CC fast-path collect) — the dumped plan is the FINAL
   * returned frame's physical plan, the one the caller's action executes.
+  * Runs at local[SPARK_GRAFT_CPUS], default the host's available cores.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -20,7 +21,8 @@ object PlanDump {
     val suffix = args(2)
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

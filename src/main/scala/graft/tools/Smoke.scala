@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
 /** Dev-only smoke runner: tiny corpus end-to-end + recall vs planted truth. */
 object Smoke {
   def main(args: Array[String]): Unit = {
+    val cores = Runtime.getRuntime.availableProcessors
     val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -25,7 +25,7 @@ object StreamProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toInt else 100000
     val nBatches = if (args.length > 1) args(1).toInt else 10
-    val cores = sys.env.getOrElse("GRAFT_CORES", "8").toInt
+    val cores = Runtime.getRuntime.availableProcessors
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)

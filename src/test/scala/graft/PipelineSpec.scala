@@ -104,6 +104,13 @@ class PipelineSpec extends SparkSpec {
     assert(pairs(Pipeline.runLite(spark, docs, cfg)) == viaRun)
     val store = java.nio.file.Files.createTempDirectory("graft-parity").toString
     assert(pairs(Pipeline.runResumable(spark, docs, store, cfg)) == viaRun)
+    // determinism across parallelism: another shuffle width and another
+    // input partitioning must not move a single assignment
+    val conf = spark.conf
+    val width = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", "7")
+    try assert(pairs(Pipeline.run(spark, docs.repartition(3), cfg).assignments) == viaRun)
+    finally conf.set("spark.sql.shuffle.partitions", width)
   }
 
   test("metrics: five counters computed in ONE action, values = per-frame truth") {

@@ -84,4 +84,12 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("Exchange SinglePartition"),
       s"dense-id path must stay distributed:\n$p")
   }
+
+  test("SparkEntry.entry assigns every sf0.001 document exactly one cluster") {
+    val r = SparkEntry.entry(spark).agg(count(lit(1)), countDistinct("doc_id")).head()
+    val (rows, ids) = (r.getLong(0), r.getLong(1))
+    assert(rows > 0, "entry() returned no rows")
+    assert(ids == rows, s"$rows rows for $ids distinct doc_ids")
+    assert(rows == spark.read.parquet(s"$dir/documents.parquet").count())
+  }
 }
