@@ -1,79 +1,53 @@
 package graft.tools
 
 import graft.stages.ConnectedComponents
-import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 
-/** Dev-only: CC in isolation on a synthetic edge list. */
+/** Connected components in isolation on a synthetic edge list: the timer
+  * behind BENCH.md's distributed large-star/small-star numbers, which no
+  * end-to-end workload reaches (their dup graphs stay under the driver
+  * fast-path bound).
+  *
+  * Usage: `sbt -batch "runMain graft.tools.CcBench <n> [len] [chain|star] [auto|distributed]"`.
+  * `chain` (default) builds n chains of `len` edges (default 4); `star`
+  * builds ONE hub with n*len spokes, the worst-case skew for the window
+  * star rounds. `distributed` sets the fast-path bound to 0 so the star
+  * loop runs at any size. Cores and shuffle partitions are the host's
+  * available cores; pin with `taskset -c`.
+  */
 object CcBench {
   def main(args: Array[String]): Unit = {
+    val n = if (args.nonEmpty) args(0).toLong else 2000L
+    val len = if (args.length > 1) args(1).toLong else 4L
+    val star = args.length > 2 && args(2) == "star"
+    val forced = args.length > 3 && args(3) == "distributed"
+    val cores = Runtime.getRuntime.availableProcessors
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("GRAFT_PARTS", "8"))
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
-    // GRAFT_CC_STAGES=1: per-stage telemetry (wall, summed task run time,
-    // task count) to localize where the time goes — driver gaps vs executor
-    if (sys.env.get("GRAFT_CC_STAGES").contains("1")) {
-      spark.sparkContext.addSparkListener(new SparkListener {
-        private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
-          t0.put(s.stageInfo.stageId, System.nanoTime())
-        override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-          val si = s.stageInfo
-          val wall = Option(t0.remove(si.stageId))
-            .map(t => (System.nanoTime() - t) / 1e9).getOrElse(-1.0)
-          println(f"[stage] id=${si.stageId} tasks=${si.numTasks} wall=$wall%.2f " +
-            f"run=${si.taskMetrics.executorRunTime / 1e3}%.1f " +
-            f"cpu=${si.taskMetrics.executorCpuTime / 1e9}%.1f " +
-            f"gc=${si.taskMetrics.jvmGCTime / 1e3}%.1f " +
-            f"shufW=${si.taskMetrics.shuffleWriteMetrics.bytesWritten} " +
-            si.name.take(60))
-        }
-      })
-    }
-
-    val n = if (args.nonEmpty) args(0).toInt else 2000
-    // chains of length GRAFT_CC_CHAINLEN+1 nodes (default 5): a DISTRIBUTED
-    // plan (spark.range), not a driver collection — toDF on a local Seq
-    // embeds a LocalRelation whose row Vector every Catalyst
-    // transformExpressions pass re-maps, which benchmarks the analyzer
-    // against the fixture instead of CC. Long chains (e.g. CHAINLEN=4096)
-    // force a deep-diameter graph: ~log2(len) double-rounds, the fixture
-    // for per-round wall stability across many convergence actions.
-    val chainLen = sys.env.getOrElse("GRAFT_CC_CHAINLEN", "4").toLong
-    val stride = chainLen * 3 // node-id gap between chains
-    // GRAFT_CC_SHAPE=star: ONE hub with n*chainLen spokes — the worst-case
-    // skew fixture for the window star rounds (the hub's whole
-    // neighbourhood lands in one WindowExec partition and must buffer/
-    // spill). Default: n chains of chainLen edges.
+    // a distributed plan (spark.range), not a driver Seq: a LocalRelation's
+    // row Vector is re-mapped by every Catalyst pass, which would time the
+    // analyzer instead of CC
+    val ids = spark.range(n * len)
     val edges =
-      if (sys.env.get("GRAFT_CC_SHAPE").contains("star"))
-        spark.range(n.toLong * chainLen).select(
-          org.apache.spark.sql.functions.lit(0L).as("src"), ($"id" + 1).as("dst"))
-      else spark.range(n.toLong * chainLen)
-        .select((($"id" / chainLen).cast("long") * stride + $"id" % chainLen).as("src"),
-                (($"id" / chainLen).cast("long") * stride + $"id" % chainLen + 1).as("dst"))
+      if (star) ids.select(lit(0L).as("src"), (col("id") + 1).as("dst"))
+      else {
+        val node = (col("id") / len).cast("long") * (len * 3) + col("id") % len
+        ids.select(node.as("src"), (node + 1).as("dst"))
+      }
 
-    val fastMax = sys.env.get("GRAFT_CC_FAST_MAX").map(_.toLong)
-      .getOrElse(ConnectedComponents.DriverFastPathMaxEdges)
-    // GRAFT_CC_EXPLAIN=1: dump the composed double-round physical plan (as
-    // the loop builds it over the cached canonical edges) to eyeball
-    // exchange reuse, then exit without running CC
-    if (sys.env.get("GRAFT_CC_EXPLAIN").contains("1")) {
-      val e = ConnectedComponents.canonicalEdges(edges).persist()
-      e.count()
-      ConnectedComponents.doubleStarRound(e).explain("formatted")
-      spark.stop(); return
-    }
     val t0 = System.nanoTime()
-    val cc = ConnectedComponents.run(spark, edges, fastPathMaxEdges = fastMax)
+    val cc = ConnectedComponents.run(spark, edges,
+      fastPathMaxEdges = if (forced) 0L else ConnectedComponents.DriverFastPathMaxEdges)
     val k = cc.select("cluster_id").distinct().count()
-    println(f"[ccbench] n=$n components=$k wall=${(System.nanoTime() - t0) / 1e9}%.2f s")
+    println(f"[ccbench] n=$n len=$len shape=${if (star) "star" else "chain"} " +
+      f"plan=${if (forced) "distributed" else "auto"} cores=$cores components=$k " +
+      f"wall=${(System.nanoTime() - t0) / 1e9}%.2f s")
     spark.stop()
   }
 }

@@ -42,10 +42,10 @@ object ScalingBench {
 
   /** Raw compute capacity at `threads` parallel burners (mix64 hash loop,
     * the pipeline's core kernel): iterations completed in `millis`.
-    * Purpose: this sandbox's 32 vCPUs are SMT siblings of ~16 physical
-    * cores — 32 burners deliver only ~3.2x the throughput of 8 (measured),
-    * so even an embarrassingly parallel job can show at most ~0.8
-    * "efficiency" from local[8]→local[32]. The A/B run measures this
+    * Purpose: on an SMT host the top level's vCPUs include sibling threads
+    * — on a 32-vCPU / ~16-physical-core box, 32 burners delivered only
+    * ~3.2x the throughput of 8 — so even an embarrassingly parallel job
+    * can show well under 1.0 "efficiency" from local[C/4]→local[C]. The A/B run measures this
     * ceiling alongside the engine and reports efficiency both nominal
     * (vs 4.0) and normalized (vs the measured hardware capacity ratio),
     * the honest stand-in for N→4N executors on real distinct machines. */
